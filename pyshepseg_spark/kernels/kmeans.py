@@ -19,6 +19,9 @@ from __future__ import annotations
 
 import numpy as np
 
+# float64 elements in one (block, k, nbands) distance temporary
+DIST_BLOCK_ELEMS = 1 << 18
+
 
 def diagonal_cluster_centres(x_sample, num_clusters):
     """Evenly spaced centres along the diagonal of the data bounding
@@ -36,26 +39,36 @@ def diagonal_cluster_centres(x_sample, num_clusters):
 
 def lloyd_kmeans(x, init_centres, max_iter=300, tol=1e-6):
     """Plain Lloyd k-means from fixed initial centres (deterministic).
+    An empty cluster's centre moves onto the farthest sample, as in
+    sklearn.
 
-    Empty clusters keep their previous centre (sklearn instead
-    relocates them; with the diagonal init over the fixture data no
-    cluster goes empty, so results agree).
+    The nearest-centre step runs once per distinct sample row and is
+    gathered back to sample order: a raster sample repeats a few
+    spectra many times, and a row's distances do not depend on the
+    other rows, so the centres are bitwise those of a per-row loop.
+    Relocation, convergence and the centre update still run on the
+    full sample.
     """
     x = x.astype(np.float64)
     centres = init_centres.astype(np.float64).copy()
     k = centres.shape[0]
+    ux, inv = np.unique(x, axis=0, return_inverse=True)
+    inv = inv.reshape(-1)   # its shape varies across numpy releases
+    # blocked distances: each (block, k, nbands) temporary holds at
+    # most DIST_BLOCK_ELEMS float64s
+    step = max(1, DIST_BLOCK_ELEMS // (k * x.shape[1]))
     prev_assign = None
     for _ in range(max_iter):
-        # blocked distances to bound memory
-        assign = np.empty(x.shape[0], dtype=np.int64)
-        mindist = np.empty(x.shape[0], dtype=np.float64)
-        step = max(1, 4_000_000 // k)
-        for s in range(0, x.shape[0], step):
-            blk = x[s:s + step]
+        uassign = np.empty(len(ux), dtype=np.int64)
+        umindist = np.empty(len(ux), dtype=np.float64)
+        for s in range(0, len(ux), step):
+            blk = ux[s:s + step]
             dd = ((blk[:, None, :] - centres[None, :, :]) ** 2).sum(axis=2)
-            assign[s:s + step] = np.argmin(dd, axis=1)
-            mindist[s:s + step] = dd[np.arange(len(blk)),
-                                     assign[s:s + step]]
+            uassign[s:s + step] = np.argmin(dd, axis=1)
+            umindist[s:s + step] = dd[np.arange(len(blk)),
+                                      uassign[s:s + step]]
+        assign = uassign[inv]
+        mindist = umindist[inv]
         # sklearn-style empty-cluster relocation: move each empty
         # cluster's centre onto a (distinct) farthest-from-centre
         # sample, so a collapsed init still finds all modes.

@@ -52,29 +52,15 @@ def tile_for_point(xcol, ycol, tile_size, overlap, ntc, ntr):
     return tc.cast("int"), tr.cast("int")
 
 
-def point_in_segment(points, final_tiles, tile_size, overlap,
-                     salt: int = 16, grids=None):
-    """Join each point (image_id, x, y, ...) to the segment covering
-    it. Steps: grid arithmetic -> salted COGROUP on (image_id, tcol,
-    trow, salt) -> vectorized raster probe.
+# points one probe group serves before a tile's probes spread over
+# another group (and another copy of its raster)
+POINTS_PER_GROUP = 1024
 
-    Skew design: a per-tile group would serialize every probe that
-    lands on a hot tile into ONE task. Instead points carry a
-    content-derived salt and each tile raster is replicated across
-    the ``salt`` subkeys, so one tile's probes run in up to ``salt``
-    parallel tasks. Cogrouping (not joining) keeps the raster out of
-    the per-point rows: each task receives the tile bytes ONCE plus
-    its point batch — the shuffle is |points| + salt * |tiles|,
-    never |points| x |raster|.
 
-    ``grids``: optional (image_id, ntc, ntr) frame with the tile-grid
-    dimensions per image. When the caller knows them in closed form
-    (tiling.tile_grid arithmetic over each image's w/h — the same
-    recurrence that produced final_tiles), passing them avoids the
-    default derivation below, which aggregates over final_tiles and
-    therefore re-runs its full producing plan (paint + stitch-mapping
-    mapInPandas kernels — column pruning cannot reach inside a Python
-    kernel) once more per consumer."""
+def _probe_groups(points, final_tiles, tile_size, overlap, salt, grids):
+    """The two cogroup sides of :func:`point_in_segment`, both keyed
+    (image_id, tcol, trow, salt): the points, and one copy of each
+    probed tile's raster per group."""
     if grids is None:
         grids = final_tiles.groupBy("image_id").agg(
             (F.max("tcol") + 1).alias("ntc"),
@@ -85,16 +71,59 @@ def point_in_segment(points, final_tiles, tile_size, overlap,
     p = points.join(grids, "image_id")
     tc, tr = tile_for_point("x", "y", tile_size, overlap,
                             F.col("ntc"), F.col("ntr"))
+    tile_key = ["image_id", "tcol", "trow"]
     p = (p.withColumn("tcol", tc).withColumn("trow", tr)
+         .select(*tile_key, "point_id", "x", "y"))
+    # one row per tile that has points: its group count
+    groups = p.groupBy(*tile_key).count().select(
+        *tile_key, F.least(F.lit(salt), F.ceil(
+            F.col("count") / POINTS_PER_GROUP)).cast("int")
+        .alias("ngroups"))
+    p = (p.join(groups, tile_key)
          .withColumn("salt", F.pmod(F.xxhash64("point_id"),
-                                    F.lit(salt)).cast("int"))
-         .select("image_id", "tcol", "trow", "salt", "point_id",
-                 "x", "y"))
-    t = (final_tiles.select("image_id", "tcol", "trow", "xout",
-                            "yout", "out_xsize", "out_ysize",
-                            "segdata")
+                                    F.col("ngroups")).cast("int"))
+         .select(*tile_key, "salt", "point_id", "x", "y"))
+    t = (final_tiles.select(*tile_key, "xout", "yout", "out_xsize",
+                            "out_ysize", "segdata")
+         .join(groups, tile_key)
          .withColumn("salt", F.explode(F.sequence(
-             F.lit(0).cast("int"), F.lit(salt - 1).cast("int")))))
+             F.lit(0).cast("int"), F.col("ngroups") - 1)))
+         .drop("ngroups"))
+    return p, t
+
+
+def point_in_segment(points, final_tiles, tile_size, overlap,
+                     salt: int = 16, grids=None):
+    """Join each point (image_id, x, y, ...) to the segment covering
+    it. Steps: grid arithmetic -> salted COGROUP on (image_id, tcol,
+    trow, salt) -> vectorized raster probe.
+
+    Skew design: a per-tile group would serialize every probe that
+    lands on a hot tile into ONE task. Instead a tile holding ``n``
+    points is spread over ``clamp(ceil(n / POINTS_PER_GROUP), 1,
+    salt)`` groups: each point carries a content-derived salt below
+    that count and the tile raster is replicated once per group, so
+    one hot tile's probes run in up to ``salt`` parallel tasks while
+    a tile with few points ships its raster once. ``salt`` is the
+    cap, not the replication factor; tiles without points are not
+    shipped at all. Cogrouping (not joining) keeps the raster out of
+    the per-point rows: each task receives the tile bytes ONCE plus
+    its point batch — the shuffle is |points| + (groups) * raster,
+    never |points| x |raster|.
+
+    ``grids``: optional (image_id, ntc, ntr) frame with the tile-grid
+    dimensions per image. When the caller knows them in closed form
+    (tiling.tile_grid arithmetic over each image's w/h — the same
+    recurrence that produced final_tiles), passing them avoids the
+    default derivation, which aggregates over final_tiles and
+    therefore re-runs its full producing plan (paint + stitch-mapping
+    mapInPandas kernels — column pruning cannot reach inside a Python
+    kernel) once more per consumer. Precondition: ``grids`` must
+    describe the same tile_size, overlap and image set that produced
+    ``final_tiles``. A mismatched grid sends points to the wrong tile
+    or to none, so they silently answer 0 or drop out."""
+    p, t = _probe_groups(points, final_tiles, tile_size, overlap, salt,
+                         grids)
 
     out_schema = ("image_id string, point_id long, x double, "
                   "y double, seg_id long")

@@ -42,9 +42,11 @@ def install_reference_stubs():
     /root/reference/pyshepseg imports and runs as plain Python (the
     container has none of those libraries; the reference's jitted
     functions execute unjitted — semantically identical, just
-    slow)."""
+    slow). Returns the names it put in sys.modules (none when numba
+    is already there)."""
     if "numba" in sys.modules:
-        return
+        return []
+    before = set(sys.modules)
 
     numba = _mk_module("numba")
 
@@ -149,16 +151,27 @@ def install_reference_stubs():
     scipy.stats.mode = _mode
     sys.modules["scipy"] = scipy
     sys.modules["scipy.stats"] = scipy.stats
+    return sorted(set(sys.modules) - before)
 
 
 def import_reference():
     """Install the stubs and return (pyshepseg.shepseg,
-    pyshepseg.tiling) from /root/reference."""
-    install_reference_stubs()
+    pyshepseg.tiling) from REFERENCE_PATH. When the reference does
+    not import, the stubs leave sys.modules again (later imports of
+    numba, scipy or osgeo must not find the stand-ins) and one
+    ImportError names REFERENCE_PATH."""
+    stubs = install_reference_stubs()
     if REFERENCE_PATH not in sys.path:
         sys.path.insert(0, REFERENCE_PATH)
-    import pyshepseg.shepseg as refshepseg
-    import pyshepseg.tiling as reftiling
+    try:
+        import pyshepseg.shepseg as refshepseg
+        import pyshepseg.tiling as reftiling
+    except ImportError as e:
+        for name in stubs:
+            sys.modules.pop(name, None)
+        raise ImportError(
+            f"reference pyshepseg not importable from REFERENCE_PATH="
+            f"{REFERENCE_PATH!r}: {e}") from e
     return refshepseg, reftiling
 
 

@@ -89,6 +89,75 @@ def test_diagonal_centres_and_lloyd_deterministic():
     assert np.array_equal(c1, c2)
 
 
+def _lloyd_per_row(x, init_centres, max_iter=300, tol=1e-6):
+    """Frozen copy of the per-row Lloyd loop that lloyd_kmeans
+    replaced (distances for every sample row, blocks of 4e6 // k
+    rows). Returns (centres, whether an empty cluster was
+    relocated)."""
+    x = x.astype(np.float64)
+    centres = init_centres.astype(np.float64).copy()
+    k = centres.shape[0]
+    prev_assign = None
+    relocated = False
+    for _ in range(max_iter):
+        assign = np.empty(x.shape[0], dtype=np.int64)
+        mindist = np.empty(x.shape[0], dtype=np.float64)
+        step = max(1, 4_000_000 // k)
+        for s in range(0, x.shape[0], step):
+            blk = x[s:s + step]
+            dd = ((blk[:, None, :] - centres[None, :, :]) ** 2).sum(axis=2)
+            assign[s:s + step] = np.argmin(dd, axis=1)
+            mindist[s:s + step] = dd[np.arange(len(blk)),
+                                     assign[s:s + step]]
+        counts0 = np.bincount(assign, minlength=k)
+        empty = np.flatnonzero(counts0 == 0)
+        if len(empty):
+            relocated = True
+            far = np.argsort(-mindist, kind="stable")[:len(empty)]
+            for e, f in zip(empty, far):
+                centres[e] = x[f]
+                assign[f] = e
+        if prev_assign is not None and np.array_equal(assign, prev_assign):
+            break
+        prev_assign = assign
+        sums = np.zeros_like(centres)
+        counts = np.bincount(assign, minlength=k).astype(np.float64)
+        for b in range(x.shape[1]):
+            sums[:, b] = np.bincount(assign, weights=x[:, b], minlength=k)
+        nonempty = counts > 0
+        new_centres = centres.copy()
+        new_centres[nonempty] = sums[nonempty] / counts[nonempty, None]
+        shift = ((new_centres - centres) ** 2).sum()
+        centres = new_centres
+        if shift <= tol:
+            break
+    return centres, relocated
+
+
+@pytest.mark.parametrize("nbands", range(1, 9))
+def test_lloyd_distinct_rows_bitwise_matches_per_row_loop(nbands):
+    """Assigning each distinct sample row once must give the centres
+    of the per-row loop bit for bit: on a duplicate-heavy integer
+    sample whose diagonal init collapses (integer truncation makes
+    centres coincide, so clusters go empty and get relocated), and
+    on an all-distinct float sample (the IVF/PQ training case)."""
+    rng = np.random.default_rng(100 + nbands)
+    spectra = rng.integers(0, 4, (6, nbands)).astype(np.uint16)
+    dup = spectra[rng.integers(0, len(spectra), 20_000)]
+    init = diagonal_cluster_centres(dup, 10)
+    want, relocated = _lloyd_per_row(dup, init)
+    assert relocated
+    got = lloyd_kmeans(dup, init)
+    assert got.tobytes() == want.tobytes()
+
+    flt = rng.normal(size=(3000, nbands)).astype(np.float32)
+    mn, mx = flt.min(axis=0), flt.max(axis=0)
+    init = mn + np.arange(1, 17)[:, None] * (mx - mn) / 17
+    want, _ = _lloyd_per_row(flt, init)
+    got = lloyd_kmeans(flt, init)
+    assert got.tobytes() == want.tobytes()
+
+
 def test_apply_clusters_null_mask():
     img = np.zeros((2, 3, 3), dtype=np.uint16)
     img[:, 1, 1] = 65535

@@ -91,6 +91,9 @@ def test_stitch_parity_random_configs(size, tile_overlap, seed,
     from pyshepseg_spark.sources.codec import decode_image, encode_image
     from pyshepseg_spark.sources.imagegen import generate_image
 
+    # the reference replay is the oracle: without it every example
+    # fails, so fail before the Spark work rather than after it
+    refharness.import_reference()
     tile, overlap = tile_overlap
     if size <= tile:           # need a real multi-tile grid
         size = tile + max(17, size % tile)

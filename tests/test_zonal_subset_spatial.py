@@ -142,11 +142,11 @@ def test_point_in_segment_grids_param(spark, images_fixture,
     pts = pd.concat([caption_points(r.image_id, r.caption, r.w, r.h)
                      for r in pdf.itertuples()], ignore_index=True)
     points = spark.createDataFrame(pts)
-    grids = spark.createDataFrame(pd.DataFrame([
-        {"image_id": r.image_id,
-         "ntc": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[1],
-         "ntr": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[2]}
-        for r in pdf.itertuples()]))
+    grids = spark.createDataFrame(pd.DataFrame(
+        [(r.image_id, *tile_grid(r.w, r.h, cfg.tile_size,
+                                 cfg.overlap)[1:])
+         for r in pdf.itertuples()],
+        columns=["image_id", "ntc", "ntr"]))
     key = ["image_id", "point_id"]
     default = point_in_segment(points, final_tiles, cfg.tile_size,
                                cfg.overlap).toPandas() \
@@ -155,6 +155,70 @@ def test_point_in_segment_grids_param(spark, images_fixture,
                               cfg.overlap, grids=grids).toPandas() \
         .sort_values(key, ignore_index=True)
     pd.testing.assert_frame_equal(default, closed)
+
+
+def _probe_fixture(spark):
+    """A 128x128 image as a 2x2 grid of 64 px tiles (no overlap) with
+    segment id x + 1000 * y + 1, and 43 points: 40 on tile (0, 0),
+    3 on tile (1, 0), none on the bottom row of tiles."""
+    yy, xx = np.mgrid[0:128, 0:128]
+    seg = (xx + 1000 * yy + 1).astype("<i8")
+    tiles = pd.DataFrame([{
+        "image_id": "img", "tcol": tc, "trow": tr, "xout": 64 * tc,
+        "yout": 64 * tr, "out_xsize": 64, "out_ysize": 64,
+        "segdata": np.ascontiguousarray(
+            seg[64 * tr:64 * tr + 64, 64 * tc:64 * tc + 64]).tobytes()}
+        for tr in range(2) for tc in range(2)])
+    rng = np.random.default_rng(3)
+    xy = np.vstack([rng.uniform(0, 64, (40, 2)),
+                    rng.uniform(0, 64, (3, 2)) + [64, 0]])
+    pts = pd.DataFrame({"image_id": "img",
+                        "point_id": np.arange(len(xy), dtype=np.int64),
+                        "x": xy[:, 0], "y": xy[:, 1]})
+    want = seg[np.floor(xy[:, 1]).astype(int),
+               np.floor(xy[:, 0]).astype(int)]
+    return (spark.createDataFrame(pts), spark.createDataFrame(tiles),
+            want)
+
+
+def test_point_in_segment_spreads_hot_tile(spark, monkeypatch):
+    """A tile with more points than POINTS_PER_GROUP spreads over
+    ceil(n / POINTS_PER_GROUP) groups (at most ``salt``), a tile
+    below it ships its raster once, and the answers equal the
+    unsalted (salt=1) probe's."""
+    from pyshepseg_spark.operators import spatial
+    monkeypatch.setattr(spatial, "POINTS_PER_GROUP", 8)
+    points, tiles, want = _probe_fixture(spark)
+
+    p, t = spatial._probe_groups(points, tiles, 64, 0, 16, None)
+    groups = t.groupBy("tcol", "trow").agg(
+        F.sort_array(F.collect_list("salt")).alias("s")).toPandas()
+    groups = {(r.tcol, r.trow): list(r.s) for r in groups.itertuples()}
+    assert groups[(0, 0)] == [0, 1, 2, 3, 4]     # ceil(40 / 8)
+    assert groups[(1, 0)] == [0]
+    hot = p.filter((F.col("tcol") == 0) & (F.col("trow") == 0))
+    assert hot.select("salt").distinct().count() > 1
+    _, t3 = spatial._probe_groups(points, tiles, 64, 0, 3, None)
+    assert t3.filter((F.col("tcol") == 0) & (F.col("trow") == 0)) \
+        .count() == 3                           # salt caps the spread
+
+    key = ["image_id", "point_id"]
+    salted = point_in_segment(points, tiles, 64, 0).toPandas() \
+        .sort_values(key, ignore_index=True)
+    single = point_in_segment(points, tiles, 64, 0, salt=1) \
+        .toPandas().sort_values(key, ignore_index=True)
+    pd.testing.assert_frame_equal(salted, single)
+    assert salted["seg_id"].tolist() == want.tolist()
+
+
+def test_point_in_segment_skips_tiles_without_points(spark):
+    """Only tiles that some point falls on reach the probe."""
+    from pyshepseg_spark.operators import spatial
+    points, tiles, _ = _probe_fixture(spark)
+    _, t = spatial._probe_groups(points, tiles, 64, 0, 16, None)
+    shipped = sorted(map(tuple, t.select("tcol", "trow").toPandas()
+                         .to_numpy().tolist()))
+    assert shipped == [(0, 0), (1, 0)]
 
 
 def test_knn_matches_brute_force(spark, images_fixture, final_tiles):
