@@ -19,7 +19,9 @@
   end. Near-dup hashing (minhash/simhash/fingerprint) uses a
   cross-engine md5-28bit path so DuckDB replays those pipelines
   bit-for-bit; embedding_near_dups_lsh is checked against the exact
-  all-pairs cosine join.
+  all-pairs cosine join. ``oracle_names()`` lists the oracles
+  without building them and ``oracle_sql_for(name)`` builds one, so
+  a missing reference fails only the two oracles that replay it.
 """
 
 from __future__ import annotations
@@ -1213,7 +1215,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def oracle_sql() -> dict[str, str]:
+def _oracle_entries() -> dict[str, str | Callable[[], str]]:
+    """name -> DuckDB SQL, or a zero-argument function returning it
+    for the oracles that take work to build (the two
+    segmentation-derived ones replay the reference and raise
+    ImportError naming REFERENCE_PATH where it is absent)."""
     d = {
         "a1_histogram": """
             SELECT o_custkey AS seg_id, COUNT(*) AS cnt
@@ -1466,10 +1472,10 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(n) - COUNT(*) AS BIGINT) AS n_dups
             FROM per
         """,
-        "lang_id": _lang_id_oracle(),
-        "minhash_near_dups": _minhash_oracle(),
-        "simhash_near_dups": _simhash_oracle(),
-        "fingerprint": _fingerprint_oracle(),
+        "lang_id": _lang_id_oracle,
+        "minhash_near_dups": _minhash_oracle,
+        "simhash_near_dups": _simhash_oracle,
+        "fingerprint": _fingerprint_oracle,
         "tpch_q3ish": """
             WITH rev AS (
                 SELECT o_orderkey, o_orderdate,
@@ -1500,7 +1506,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT point_id, interval_id, v, lo, hi
             FROM pts JOIN ivl ON v >= lo AND v <= hi
         """,
-        "morton_cells": _morton_oracle(),
+        "morton_cells": _morton_oracle,
         "asof_join": """
             WITH clicks AS (
                 SELECT user_id, ts, ROUND(MAX(value), 4) AS value
@@ -1669,7 +1675,7 @@ def oracle_sql() -> dict[str, str]:
                        '\\s+')) AS INT) AS n_ws_tokens
             FROM documents
         """,
-        "ngram_jaccard": _ngram_jaccard_oracle(),
+        "ngram_jaccard": _ngram_jaccard_oracle,
         "embedding_topk": """
             SELECT q_id, c_id, CAST(rank AS INT) AS rank FROM (
                 SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -1760,9 +1766,9 @@ def oracle_sql() -> dict[str, str]:
                        AS quality
             FROM r
         """,
-        "image_features": _image_features_oracle(),
-        "segmentation_zonal": _segmentation_zonal_oracle(),
-        "point_in_segment": _point_in_segment_oracle(),
+        "image_features": _image_features_oracle,
+        "segmentation_zonal": _segmentation_zonal_oracle,
+        "point_in_segment": _point_in_segment_oracle,
         "embedding_near_dups_lsh": """
             -- exact all-pairs cosine ground truth: at threshold
             -- 0.999 only the planted scaled copies qualify (natural
@@ -1804,9 +1810,24 @@ def oracle_sql() -> dict[str, str]:
             SELECT q.*, pl.plan FROM ({d[key]}) q
             CROSS JOIN (VALUES ('udf'), ('tiled')) pl(plan)
         """
-    d["image_near_dups"] = _image_near_dups_oracle()
-    d["multimodal_near_dups"] = _multimodal_near_dups_oracle()
+    d["image_near_dups"] = _image_near_dups_oracle
+    d["multimodal_near_dups"] = _multimodal_near_dups_oracle
     return d
+
+
+def oracle_names() -> list[str]:
+    """Every query name that has an oracle, without building any."""
+    return list(_oracle_entries())
+
+
+def oracle_sql_for(name: str) -> str:
+    """Build one query's oracle SQL."""
+    e = _oracle_entries()[name]
+    return e() if callable(e) else e
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: oracle_sql_for(name) for name in oracle_names()}
 
 
 def _shingle_cte(k: int) -> str:

@@ -239,8 +239,9 @@ def minhash_lsh_pairs(signatures, id_col="doc_id", num_hashes=64,
     BOTH self-join sides (~3-4 evaluations per doc; interpreted HOFs
     get no codegen CSE — PERF.md round-4/5 A/B), a measured ~35%
     tax on the full minhash_near_dups shape at sf0.1
-    (scripts/microbench_minhash.py: 1.24 s -> 0.81 s median, and
-    every signature rewrite ties within noise once barriered). At
+    (PERF.md "Round 5 — minhash signature fan-out": 1.24 s ->
+    0.81 s median, and every signature rewrite ties within noise
+    once barriered). At
     real scale a signature table is materialized anyway (compute
     once, probe many); pass False to keep lineage (e.g. ahead of a
     user-managed persist or table write)."""

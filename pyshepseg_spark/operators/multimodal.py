@@ -14,7 +14,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..sources.codec import decode_image, encode_image
+from ..sources.codec import (IMAGE_COLS, check_decode_policy, decode_rows,
+                             encode_image)
 
 IMAGE_FEATURES_SCHEMA = (
     "image_id string, band int, w int, h int, nbands int, "
@@ -31,8 +32,7 @@ def image_features(images_df, img_null_val: int | None = None):
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
+            for row, img in decode_rows(pdf):
                 x = img.astype(np.float64)
                 if img_null_val is not None:
                     valid = (img != img_null_val).all(axis=0)
@@ -55,7 +55,7 @@ def image_features(images_df, img_null_val: int | None = None):
                 "image_id", "band", "w", "h", "nbands", "band_mean",
                 "band_std", "nonnull_frac"])
 
-    return images_df.select("image_id", "bytes", "w", "h", "fmt") \
+    return images_df.select(*IMAGE_COLS) \
         .mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
 
 
@@ -67,8 +67,7 @@ def resize_images(images_df, factor: int = 2):
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
+            for row, img in decode_rows(pdf):
                 nb, h, w = img.shape
                 hh, ww = (h // factor) * factor, (w // factor) * factor
                 small = img[:, :hh, :ww].reshape(
@@ -82,7 +81,7 @@ def resize_images(images_df, factor: int = 2):
             yield pd.DataFrame(out, columns=["image_id", "w", "h",
                                              "fmt", "bytes"])
 
-    return images_df.select("image_id", "bytes", "w", "h", "fmt") \
+    return images_df.select(*IMAGE_COLS) \
         .mapInPandas(kernel,
                      "image_id string, w int, h int, fmt string, "
                      "bytes binary")
@@ -117,34 +116,22 @@ def image_near_dups(images_df, max_hamming: int = 6,
     SegConfig.on_decode_error)."""
     from ..operators.dedup import simhash_near_dups
 
-    if on_decode_error not in ("fail", "skip"):
-        raise ValueError(
-            f"on_decode_error must be 'fail' or 'skip', "
-            f"got {on_decode_error!r}")
+    check_decode_policy(on_decode_error)
     if recompute:
-        from ..sources.codec import decode_image
         from pyspark.sql import functions as F
 
         def kernel(batches):
             from ..sources.codec import average_phash
             for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False):
-                    try:
-                        img = decode_image(row.bytes, row.fmt,
-                                           row.w, row.h)
-                    except Exception:
-                        if on_decode_error == "skip":
-                            continue
-                        raise
-                    out.append({"image_id": row.image_id,
-                                "phash": int(average_phash(
-                                    img[0], img_null_val))})
+                out = [{"image_id": row.image_id,
+                        "phash": int(average_phash(img[0],
+                                                   img_null_val))}
+                       for row, img in decode_rows(pdf,
+                                                   on_decode_error)]
                 yield pd.DataFrame(
                     out, columns=["image_id", "phash"])
 
-        hashes = images_df.select(
-            "image_id", "bytes", "w", "h", "fmt").mapInPandas(
+        hashes = images_df.select(*IMAGE_COLS).mapInPandas(
             kernel, "image_id string, phash long")
         sim = hashes.select(F.col("image_id").alias(id_col),
                             F.col("phash").alias("simhash"))

@@ -47,8 +47,11 @@ from pyspark.sql import functions as F
 from ..constants import MAX_CLUMP_SIZE
 from ..kernels.kmeans import fit_spectral_clusters_sample
 from ..kernels.shepherd import do_shepherd_segmentation
+from ..sources.codec import check_decode_policy, decode_rows
 from .tiling import (collect_sample, decode_tile_pixels, explode_tiles,
+                     fit_image_centres, image_columns, row_num_clusters,
                      stride_sample_pixels)
+from .zonal import value_histogram
 
 
 @dataclass
@@ -66,15 +69,19 @@ class SegConfig:
     fixed_kmeans_init: bool = True
     kmeans_n_init: int = 5
     # "fail" (default): a corrupt/undecodable image row raises, like
-    # the reference. "skip": the kernel drops the row (it yields no
-    # tiles / stats / raster) — at 10^12-image scale garbage rows
-    # exist and must not kill the stage.
+    # the reference. "skip": every kernel that decodes image bytes
+    # drops the row (it yields no tiles / sample / stats / raster) —
+    # at 10^12-image scale garbage rows exist and must not kill the
+    # stage.
     on_decode_error: str = "fail"
     spect_dist_pcntile: int = 50
     max_clump_size: int = MAX_CLUMP_SIZE
     tile_size: int = 256
     overlap: int = 64
     sample_target_pixels: int = 1_000_000
+
+    def __post_init__(self):
+        check_decode_policy(self.on_decode_error)
 
 
 SEG_TILE_SCHEMA = (
@@ -92,8 +99,9 @@ def fit_global_centres(images_df, cfg: SegConfig,
                        validate: bool = True) -> np.ndarray:
     """Prepare phase for the one-giant-raster scenario: deterministic
     global stride sample -> driver Lloyd fit (reference
-    tiling.py:196-224). For a table of independent images use
-    :func:`fit_centres_per_image` instead.
+    tiling.py:196-224). For a table of independent images pass no
+    centres: each image then gets its own deterministic fit inside
+    the segmentation kernel (tiling.fit_image_centres).
 
     validate=True runs the same S4 nodata discovery as
     segment_images_tiled's validate block BEFORE sampling: the
@@ -109,60 +117,25 @@ def fit_global_centres(images_df, cfg: SegConfig,
         if nv is not None:
             cfg = dataclasses.replace(cfg, img_null_val=int(nv))
     sample_df = stride_sample_pixels(
-        images_df, cfg.sample_target_pixels, cfg.img_null_val)
+        images_df, cfg.sample_target_pixels, cfg.img_null_val,
+        on_decode_error=cfg.on_decode_error)
     x = collect_sample(sample_df)
     return fit_spectral_clusters_sample(
         x, cfg.num_clusters, cfg.fixed_kmeans_init)
 
 
-CENTRES_SCHEMA = "image_id string, k int, nbands int, centres binary"
-
-
-def fit_centres_per_image(images_df, cfg: SegConfig):
-    """Per-image k-means fit (each table row is an independent raster,
-    so each gets its own deterministic clustering — the reference's
-    one-kmeans-per-raster rule applied row-wise). Runs as mapInPandas,
-    embarrassingly parallel, no driver bottleneck. If images_df has a
-    ``num_clusters`` column it overrides cfg.num_clusters per row.
-
-    Returns a small DataFrame (image_id, k, nbands, centres) meant to
-    be broadcast-joined onto the tiles table."""
-    from ..sources.codec import decode_image
-
-    cfg_b = cfg
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
-                nbands = img.shape[0]
-                x = img.transpose(1, 2, 0).reshape(-1, nbands)
-                if cfg_b.img_null_val is not None:
-                    x = x[(x != cfg_b.img_null_val).all(axis=1)]
-                npix = x.shape[0]
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters) or
-                        cfg_b.num_clusters)
-                # reference in-memory default: 1% stride sample
-                # (shepseg.py clusterSubsamplePcnt=1), floored so tiny
-                # images still give Lloyd enough points per cluster
-                target = min(npix, max(npix // 100, k * 200, 2000))
-                skip = max(1, npix // target)
-                x = x[::skip].astype(np.float64)
-                centres = fit_spectral_clusters_sample(
-                    x, k, cfg_b.fixed_kmeans_init)
-                out.append({"image_id": row.image_id, "k": k,
-                            "nbands": nbands,
-                            "centres": centres.astype(
-                                "<f8").tobytes()})
-            yield pd.DataFrame(out, columns=["image_id", "k",
-                                             "nbands", "centres"])
-
-    return images_df.select(*cols).mapInPandas(kernel, CENTRES_SCHEMA)
+def run_shepherd(img, centres, cfg: SegConfig):
+    """The Shepherd kernel on one decoded (nbands, h, w) array with
+    pre-fitted centres and cfg's segmentation parameters."""
+    return do_shepherd_segmentation(
+        img,
+        min_segment_size=cfg.min_segment_size,
+        max_spectral_diff=cfg.max_spectral_diff,
+        img_null_val=cfg.img_null_val,
+        four_connected=cfg.four_connected,
+        centres=centres,
+        spect_dist_pcntile=cfg.spect_dist_pcntile,
+        max_clump_size=cfg.max_clump_size)
 
 
 def _trim_bounds(tc, tr, ntc, ntr, xs, ys, margin):
@@ -199,15 +172,7 @@ def _segment_tile_record(image_id, tcol, trow, ntcols, ntrows,
     overlap = cfg.overlap
     margin = overlap // 2
     t0 = time.time()
-    res = do_shepherd_segmentation(
-        img,
-        min_segment_size=cfg.min_segment_size,
-        max_spectral_diff=cfg.max_spectral_diff,
-        img_null_val=cfg.img_null_val,
-        four_connected=cfg.four_connected,
-        centres=centres,
-        spect_dist_pcntile=cfg.spect_dist_pcntile,
-        max_clump_size=cfg.max_clump_size)
+    res = run_shepherd(img, centres, cfg)
     seg = res.segimg
     nseg = int(seg.max())
     top, bottom, left, right = _trim_bounds(
@@ -261,24 +226,18 @@ def _segment_tile_record(image_id, tcol, trow, ntcols, ntrows,
         rec["segtile"] = seg.astype("<u4").tobytes()
     if emit_hist:
         # trimmed-core FULL value histogram on LOCAL ids (nodata
-        # bins kept, so the A4 counter derives from the same rows);
-        # val < 2^17 for u16 imagery, same packing as zonal
-        core = seg[top:bottom, left:right].ravel().astype(np.int64)
-        m0 = core > 0
-        hist = []
-        for b in range(img.shape[0]):
-            v = img[b, top:bottom, left:right].ravel().astype(
-                np.int64)
-            if not m0.any():
-                continue
-            key = (core[m0] << np.int64(17)) | v[m0]
-            uk, cnt = np.unique(key, return_counts=True)
-            hist.extend(
-                {"local": int(k >> 17), "band": b,
-                 "val": int(k & ((1 << 17) - 1)), "cnt": int(c)}
-                for k, c in zip(uk, cnt))
-        rec["hist"] = hist
+        # bins kept, so the A4 counter derives from the same rows)
+        rec["hist"] = _hist_structs("local", value_histogram(
+            seg[top:bottom, left:right],
+            img[:, top:bottom, left:right]))
     return rec
+
+
+def _hist_structs(seg_key, hist):
+    """value_histogram arrays -> the array<struct> cell a kernel row
+    carries (seg_key names the segment-id field)."""
+    return [{seg_key: s, "band": b, "val": v, "cnt": c}
+            for s, b, v, c in zip(*(a.tolist() for a in hist))]
 
 
 HIST_STRUCT = (", hist array<struct<local:long, band:int, val:long, "
@@ -313,28 +272,17 @@ def explode_and_segment(images_df, cfg: SegConfig,
     pixel/segtile binaries — the checkpoint and every downstream
     exchange then scale with histogram bins + strip bytes, not
     pixels."""
-    from ..sources.codec import decode_image, encode_raw_u16
-    from .tiling import fit_image_centres, tile_grid
+    from ..sources.codec import encode_raw_u16
+    from .tiling import tile_grid
 
-    has_k = "num_clusters" in images_df.columns
     schema, out_cols = _seg_tile_schema(emit_hist, keep_binaries)
 
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if cfg.on_decode_error == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg.num_clusters)
-                        or cfg.num_clusters) if has_k \
-                    else cfg.num_clusters
-                centres = fit_image_centres(img, k, cfg)
+            for row, img in decode_rows(pdf, cfg.on_decode_error):
+                centres = fit_image_centres(
+                    img, row_num_clusters(row, cfg), cfg)
                 tiles, ntcols, ntrows = tile_grid(
                     row.w, row.h, cfg.tile_size, cfg.overlap)
                 for (tc, tr, xp, yp, xs, ys) in tiles:
@@ -349,10 +297,8 @@ def explode_and_segment(images_df, cfg: SegConfig,
                         keep_binaries=keep_binaries))
             yield pd.DataFrame(out, columns=out_cols)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    if has_k:
-        cols.append("num_clusters")
-    return images_df.select(*cols).mapInPandas(kernel, schema)
+    return images_df.select(*image_columns(images_df)) \
+        .mapInPandas(kernel, schema)
 
 
 def segment_tiles(tiles_df, centres, cfg: SegConfig,
@@ -367,9 +313,8 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
     lineage table.
 
     ``centres``: None if tiles_df already carries a per-image
-    ``centres`` column (the fused explode_tiles path — preferred), a
-    numpy (k, nbands) matrix (giant-single-raster mode), or the
-    per-image centres DataFrame from :func:`fit_centres_per_image`.
+    ``centres`` column (explode_tiles with fit_cfg), or a shared
+    numpy (k, nbands) matrix (giant-single-raster mode).
 
     emit_hist/keep_binaries mirror explode_and_segment: stats-only
     consumers set (True, False) so the kernel output carries per-tile
@@ -377,23 +322,15 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
     giant-single-raster stats path (segment_stats_tiled with shared
     centres) needs them here because it runs the UNFUSED kernel to
     spread one mosaic's tiles across the cluster."""
-    margin = cfg.overlap // 2
-    overlap = cfg.overlap
-    cfg_b = cfg
     if centres is None:
         if "centres" not in tiles_df.columns:
             raise ValueError("tiles_df lacks 'centres'; pass "
                              "fit_cfg to explode_tiles or supply "
                              "centres")
-    elif isinstance(centres, np.ndarray):
+    else:
         tiles_df = tiles_df.withColumn(
             "centres", F.lit(bytearray(centres.astype(
                 "<f8").tobytes())))
-    else:
-        # per-image centres: one row per image (unbounded at scale)
-        # — AQE broadcasts when small
-        tiles_df = tiles_df.join(
-            centres.select("image_id", "centres"), "image_id")
 
     schema, out_cols = _seg_tile_schema(emit_hist, keep_binaries)
 
@@ -408,7 +345,7 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
                 out.append(_segment_tile_record(
                     row.image_id, row.tcol, row.trow, row.ntcols,
                     row.ntrows, row.xpos, row.ypos, row.xsize,
-                    row.ysize, img, row.pixels, c, cfg_b,
+                    row.ysize, img, row.pixels, c, cfg,
                     emit_hist=emit_hist,
                     keep_binaries=keep_binaries))
             yield pd.DataFrame(out, columns=out_cols)
@@ -983,24 +920,9 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
                     rec["pixels"] = np.ascontiguousarray(
                         pix_core.astype("<u2")).tobytes()
                 if with_histogram:
-                    hist = []
-                    segf = final.ravel()
-                    valid = segf > 0
-                    for b in range(row.nbands):
-                        v = pix_core[b].ravel().astype(np.int64)
-                        m = valid
-                        if img_null_val is not None:
-                            m = m & (v != img_null_val)
-                        if not m.any():
-                            continue
-                        key = (segf[m] << np.int64(17)) | v[m]
-                        uk, cnt = np.unique(key, return_counts=True)
-                        hist.extend(
-                            {"seg_id": int(k >> 17), "band": b,
-                             "val": int(k & ((1 << 17) - 1)),
-                             "cnt": int(c)}
-                            for k, c in zip(uk, cnt))
-                    rec["hist"] = hist
+                    rec["hist"] = _hist_structs(
+                        "seg_id", value_histogram(final, pix_core,
+                                                  img_null_val))
                 out.append(rec)
             cols = ["image_id", "tcol", "trow", "xout", "yout",
                     "out_xsize", "out_ysize", "nbands"]
@@ -1015,6 +937,35 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
               else FINAL_TILE_SCHEMA_NOPIX)
     schema += HIST_COL if with_histogram else ""
     return joined.mapInPandas(kernel, schema)
+
+
+def segment_to_tiles(images_df, cfg: SegConfig, centres=None,
+                     emit_hist: bool = False,
+                     keep_binaries: bool = True):
+    """images -> seg_tiles, the kernel stage of every tiled path.
+
+    centres=None: fully fused — decode + fit + tile + segment in ONE
+    kernel pass (explode_and_segment; raw tiles never round-trip
+    through Arrow). Parallelism = image count; the right default for
+    the many-images flagship.
+
+    A shared (k, nbands) matrix: giant-single-raster mode. Tiling and
+    segmentation are separate kernels so the tile rows can SPREAD
+    between them — explode_tiles emits all of an image's tiles in
+    the one partition that decoded it, and without the shuffle the
+    segment kernel would run an entire mosaic serially.
+    spread_small_scan is a no-op once input splits already provide
+    parallelism (the 10^12-images regime), so the extra exchange is
+    paid exactly when intra-image parallelism is the point."""
+    if centres is None:
+        return explode_and_segment(images_df, cfg, emit_hist=emit_hist,
+                                   keep_binaries=keep_binaries)
+    from .skew import spread_small_scan
+    tiles = spread_small_scan(explode_tiles(
+        images_df, cfg.tile_size, cfg.overlap,
+        on_decode_error=cfg.on_decode_error))
+    return segment_tiles(tiles, centres, cfg, emit_hist=emit_hist,
+                         keep_binaries=keep_binaries)
 
 
 def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
@@ -1044,26 +995,7 @@ def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
             nv = discover_img_null_val(images_df)
             if nv is not None:
                 cfg = dataclasses.replace(cfg, img_null_val=int(nv))
-    if centres is None:
-        # fully fused path: decode + fit + tile + segment in ONE
-        # kernel pass (raw tiles never round-trip through Arrow).
-        # Parallelism = image count; the right default for the
-        # many-images flagship.
-        seg_tiles = explode_and_segment(images_df, cfg)
-    else:
-        # giant-single-raster mode: tiling and segmentation are
-        # separate kernels so the tile rows can SPREAD between them
-        # — explode_tiles emits all of an image's tiles in the one
-        # partition that decoded it, and without the shuffle the
-        # segment kernel would run an entire mosaic serially.
-        # spread_small_scan is a no-op once input splits already
-        # provide parallelism (the 10^12-images regime), so the
-        # extra exchange is paid exactly when intra-image
-        # parallelism is the point.
-        from .skew import spread_small_scan
-        tiles = spread_small_scan(
-            explode_tiles(images_df, cfg.tile_size, cfg.overlap))
-        seg_tiles = segment_tiles(tiles, centres, cfg)
+    seg_tiles = segment_to_tiles(images_df, cfg, centres)
     final = stitch(seg_tiles, cfg, with_histogram=with_histogram,
                    mode=mode, keep_pixels=keep_pixels)
     return final, seg_tiles, centres
@@ -1145,6 +1077,39 @@ SEG_IMAGE_SCHEMA = (
 )
 
 
+def whole_image_kernel(images_df, cfg: SegConfig, emit, schema,
+                       columns, centres=None):
+    """Decode -> centres -> Shepherd kernel per image row, in ONE
+    mapInPandas pass with zero shuffle — the body shared by
+    segment_images and zonal.segment_and_histogram.
+    ``emit(row, img, res, secs)`` turns one image's result into an
+    output frame (``columns``/``schema``). centres: None fits each
+    image on the same floored sample as the tiled path (so
+    single-tile images give identical results on both), or a shared
+    numpy matrix."""
+
+    def kernel(batches):
+        for pdf in batches:
+            frames = []
+            for row, img in decode_rows(pdf, cfg.on_decode_error):
+                t0 = time.time()
+                c = centres
+                if c is None:
+                    c = fit_image_centres(
+                        img, row_num_clusters(row, cfg), cfg)
+                res = run_shepherd(img, c, cfg)
+                frames.append(emit(row, img, res, time.time() - t0))
+            yield (pd.concat(frames, ignore_index=True) if frames
+                   else pd.DataFrame(columns=columns))
+
+    return images_df.select(*image_columns(images_df)) \
+        .mapInPandas(kernel, schema)
+
+
+SEG_IMAGE_COLS = ["image_id", "w", "h", "nbands", "nseg", "segdata",
+                  "n_single_elim", "n_small_elim", "seg_secs"]
+
+
 def segment_images(images_df, cfg: SegConfig, centres=None):
     """Segment each image as a single tile (mapInPandas, zero
     shuffle). The common path when individual images fit a worker —
@@ -1152,70 +1117,22 @@ def segment_images(images_df, cfg: SegConfig, centres=None):
     tiling is reserved for oversized rasters.
 
     centres: None (fit per image inside the kernel — fully fused, one
-    pass over the data), a shared numpy matrix, or a per-image
-    centres DataFrame to broadcast-join."""
-    cfg_b = cfg
-    shared = centres if isinstance(centres, np.ndarray) else None
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-    df = images_df.select(*cols)
-    if centres is not None and not isinstance(centres, np.ndarray):
-        df = df.join(centres.select("image_id", "centres"),
-                     "image_id")
+    pass over the data) or a shared numpy matrix."""
 
-    def kernel(batches):
-        from ..sources.codec import decode_image
-        from .tiling import fit_image_centres
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                t0 = time.time()
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if cfg_b.on_decode_error == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters)
-                        or cfg_b.num_clusters)
-                if shared is not None:
-                    c = shared
-                elif hasattr(row, "centres"):
-                    c = np.frombuffer(row.centres,
-                                      dtype="<f8").reshape(
-                        -1, img.shape[0])
-                else:
-                    # same floored-sample fit as the tiled path:
-                    # both consumption paths give identical results
-                    # on images that fit one tile
-                    c = fit_image_centres(img, k, cfg_b)
-                res = do_shepherd_segmentation(
-                    img,
-                    min_segment_size=cfg_b.min_segment_size,
-                    max_spectral_diff=cfg_b.max_spectral_diff,
-                    img_null_val=cfg_b.img_null_val,
-                    four_connected=cfg_b.four_connected,
-                    centres=c,
-                    spect_dist_pcntile=cfg_b.spect_dist_pcntile,
-                    max_clump_size=cfg_b.max_clump_size)
-                seg = res.segimg.astype("<i8")
-                out.append({
-                    "image_id": row.image_id,
-                    "w": row.w, "h": row.h, "nbands": img.shape[0],
-                    "nseg": int(seg.max()),
-                    "segdata": seg.tobytes(),
-                    "n_single_elim": int(res.single_pixels_eliminated),
-                    "n_small_elim": int(res.small_segments_eliminated),
-                    "seg_secs": time.time() - t0,
-                })
-            yield pd.DataFrame(out, columns=[
-                "image_id", "w", "h", "nbands", "nseg", "segdata",
-                "n_single_elim", "n_small_elim", "seg_secs"])
+    def emit(row, img, res, secs):
+        seg = res.segimg.astype("<i8")
+        return pd.DataFrame([{
+            "image_id": row.image_id,
+            "w": row.w, "h": row.h, "nbands": img.shape[0],
+            "nseg": int(seg.max()),
+            "segdata": seg.tobytes(),
+            "n_single_elim": int(res.single_pixels_eliminated),
+            "n_small_elim": int(res.small_segments_eliminated),
+            "seg_secs": secs,
+        }], columns=SEG_IMAGE_COLS)
 
-    return df.mapInPandas(kernel, SEG_IMAGE_SCHEMA)
+    return whole_image_kernel(images_df, cfg, emit, SEG_IMAGE_SCHEMA,
+                              SEG_IMAGE_COLS, centres=centres)
 
 
 def assemble_image(final_tiles_pdf: pd.DataFrame, w: int, h: int):
@@ -1230,7 +1147,8 @@ def assemble_image(final_tiles_pdf: pd.DataFrame, w: int, h: int):
     return out
 
 
-__all__ = ["SegConfig", "fit_global_centres", "segment_tiles",
+__all__ = ["SegConfig", "fit_global_centres", "run_shepherd",
+           "segment_to_tiles", "segment_tiles",
            "with_offsets", "tile_offsets", "extract_strips", "correspondence_edges",
            "connected_components", "build_mapping",
            "sequential_stitch_mapping",

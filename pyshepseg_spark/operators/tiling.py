@@ -19,12 +19,10 @@ the engine's H3/S2-analogue spatial index for in-image spatial joins
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
 
-from ..sources.codec import decode_image, encode_raw_u16
+from ..sources.codec import IMAGE_COLS, decode_rows, encode_raw_u16
 
 TILE_SCHEMA = (
     "image_id string, tcol int, trow int, ntcols int, ntrows int, "
@@ -195,6 +193,19 @@ def morton_cell(x: int, y: int, bits: int = 16) -> int:
     return v
 
 
+def image_columns(images_df):
+    """The image columns a decode kernel reads, plus the optional
+    per-row ``num_clusters`` column when the table has one."""
+    if "num_clusters" in images_df.columns:
+        return IMAGE_COLS + ["num_clusters"]
+    return IMAGE_COLS
+
+
+def row_num_clusters(row, cfg) -> int:
+    """Per-row cluster count: an image row's ``num_clusters`` column
+    overrides cfg.num_clusters when present and non-zero."""
+    return int(getattr(row, "num_clusters", None) or cfg.num_clusters)
+
 
 def fit_image_centres(img, k, cfg):
     """Deterministic per-image centre fit on a strided non-null
@@ -216,11 +227,12 @@ def fit_image_centres(img, k, cfg):
     x = x[::max(1, npix // target)].astype(np.float64)
     return fit_spectral_clusters_sample(
         x, k, cfg.fixed_kmeans_init,
-        n_init=getattr(cfg, "kmeans_n_init", 5))
+        n_init=cfg.kmeans_n_init)
 
 
 def explode_tiles(images_df, tile_size: int, overlap: int,
-                  cell_shift: int = 8, fit_cfg=None):
+                  cell_shift: int = 8, fit_cfg=None,
+                  on_decode_error: str = "fail"):
     """images DataFrame -> tiles DataFrame (one row per overlapping
     tile, pixels re-encoded raw_u16). Runs as mapInPandas: narrow,
     no shuffle; Catalyst prunes unused image columns upstream.
@@ -229,27 +241,25 @@ def explode_tiles(images_df, tile_size: int, overlap: int,
     k-means fit is FUSED into the same kernel — each image is decoded
     exactly once, and every tile row carries its image's centre
     matrix (a few hundred bytes), replacing a separate fit stage plus
-    broadcast join."""
+    broadcast join.
+
+    on_decode_error: the caller's SegConfig.on_decode_error ("skip"
+    drops undecodable rows; see sources.codec.decode_rows)."""
     if overlap % 2 != 0:
         raise ValueError("overlap size must be even")  # tiling.py:746
     if tile_size <= 2 * overlap:
         raise ValueError("tile_size must exceed 2*overlap")
-    has_k = fit_cfg is not None and "num_clusters" in images_df.columns
 
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
+            for row, img in decode_rows(pdf, on_decode_error):
                 nbands = img.shape[0]
                 centres_bytes = None
                 if fit_cfg is not None:
-                    k = int(getattr(row, "num_clusters",
-                                    fit_cfg.num_clusters)
-                            or fit_cfg.num_clusters) if has_k \
-                        else fit_cfg.num_clusters
                     centres_bytes = fit_image_centres(
-                        img, k, fit_cfg).astype("<f8").tobytes()
+                        img, row_num_clusters(row, fit_cfg),
+                        fit_cfg).astype("<f8").tobytes()
                 tiles, ntcols, ntrows = tile_grid(
                     row.w, row.h, tile_size, overlap)
                 for (tc, tr, xp, yp, xs, ys) in tiles:
@@ -275,12 +285,10 @@ def explode_tiles(images_df, tile_size: int, overlap: int,
                 cols.append("centres")
             yield pd.DataFrame(out, columns=cols)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    if has_k:
-        cols.append("num_clusters")
     schema = (TILE_SCHEMA_WITH_CENTRES if fit_cfg is not None
               else TILE_SCHEMA)
-    return images_df.select(*cols).mapInPandas(kernel, schema)
+    return images_df.select(*image_columns(images_df)).mapInPandas(
+        kernel, schema)
 
 
 def decode_tile_pixels(pixels: bytes, nbands: int, ysize: int,
@@ -290,12 +298,14 @@ def decode_tile_pixels(pixels: bytes, nbands: int, ysize: int,
 
 
 def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
-                         img_null_val: int | None = None):
+                         img_null_val: int | None = None,
+                         on_decode_error: str = "fail"):
     """Global k-means sample (reference tiling.py:196-224
     fitSpectralClustersWholeFile): read every k-th non-null pixel of
     every image so the total sample is ~target_pixels, deterministic
     stride (no RNG). Returns a DataFrame with one row per image of
     packed float32 sample bytes (compact collect to the driver).
+    on_decode_error as in :func:`explode_tiles`.
     """
     from pyspark.sql import functions as F
 
@@ -307,8 +317,7 @@ def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
+            for _, img in decode_rows(pdf, on_decode_error):
                 nbands = img.shape[0]
                 x = img.transpose(1, 2, 0).reshape(-1, nbands)
                 if img_null_val is not None:
@@ -318,7 +327,7 @@ def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
                             "nbands": nbands})
             yield pd.DataFrame(out, columns=["sample", "nbands"])
 
-    return images_df.select("image_id", "bytes", "w", "h", "fmt") \
+    return images_df.select(*IMAGE_COLS) \
         .mapInPandas(kernel, "sample binary, nbands int")
 
 
@@ -351,6 +360,3 @@ def tile_metrics(seg_tiles_df):
 __all__ = ["tile_grid", "explode_tiles", "decode_tile_pixels",
            "stride_sample_pixels", "collect_sample", "morton_cell",
            "tile_metrics", "TILE_SCHEMA"]
-
-
-_ = time  # noqa: retained for kernels that time per-tile work

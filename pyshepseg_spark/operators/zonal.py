@@ -6,11 +6,15 @@ reference's whole accumulate/complete/evict state machine
 
   1. per-tile kernels emit *partial value histograms*
      (image_id, seg_id, band, val, cnt) — the reference's
-     seg -> {pixval -> count} dict (A3, tilingstats.py:466-515),
-     computed vectorized. Partial agg inside the kernel = map-side
-     combine; pixel rows are never materialized.
-  2. groupBy(image_id, seg_id, band, val).sum(cnt) merges partials,
-     then exact finalizers (A5, tilingstats.py:922-1008) derive
+     seg -> {pixval -> count} dict (A3, tilingstats.py:466-515).
+     Every kernel (segmentation tile, paint, painted tile, whole
+     image, cross-raster) packs its bins with the one vectorised
+     :func:`value_histogram`. Partial agg inside the kernel =
+     map-side combine; pixel rows are never materialized.
+  2. :func:`merge_histogram` sums the partials per (image_id,
+     seg_id, band, val), then the exact finalizers of
+     :func:`segment_stats_selected` (A5, tilingstats.py:922-1008;
+     :func:`segment_stats` is its fixed selection) derive
      min/max/mean/stddev/mode/median/percentile/pixcount from the
      histogram — *exact*, not percentile_approx, matching the
      reference bitwise for integer imagery.
@@ -28,80 +32,59 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..constants import MISSING_STATS_VALUE
+from ..sources.codec import decode_rows
 
 HIST_SCHEMA = ("image_id string, seg_id long, band int, val long, "
                "cnt long")
+HIST_COLS = ["image_id", "seg_id", "band", "val", "cnt"]
 
 
-def stats_histogram_from_stitch(seg_tiles_off, mapping, overlap: int,
-                                img_null_val: int | None = None):
-    """Paint + histogram in ONE kernel pass, emitting only the
-    partial (seg, band, value) histogram rows — the painted mosaic is
-    never materialized. This mirrors the reference's stats lifecycle
-    (calcPerSegmentStatsTiled reads rasters and writes only the RAT,
-    tilingstats.py:85-212): when the consumer wants statistics, a
-    second copy of the mosaic through Arrow is pure memory-bandwidth
-    cost and is the non-scaling fraction at high core counts. Use
-    paint_final_tiles when the raster itself is required.
+def value_histogram(seg, pix, null_val: int | None = None):
+    """The per-segment value-histogram packer behind every raster
+    kernel (the reference's seg -> {pixval -> count} accumulator,
+    tilingstats.py:466-515), vectorised per band.
 
-    RESUME-path variant (input: a restored S6 checkpoint whose rows
-    carry pixel/segtile binaries but no kernel histograms). The
-    primary stats path, segment_stats_tiled, gets the histograms
-    from the segmentation kernel itself (explode_and_segment
-    emit_hist) and never re-reads binaries."""
-    from .segment import _trim_bounds
-    from .tiling import decode_tile_pixels
+    ``seg``: segment ids (any shape, flattened; 0 = no segment).
+    ``pix``: (nbands, ...) pixel values over the same pixels.
+    ``null_val``: pixels of that value are left out; None keeps the
+    nodata bins (the A4 counter derives from them). Returns int64
+    seg_id, int32 band, int64 val, int64 cnt arrays, ordered by band,
+    then seg_id, then val.
 
-    margin = overlap // 2
-    keys = ["image_id", "tcol", "trow"]
-    # build_mapping keeps the tile key on every mapping row: group
-    # straight by tile (no gid re-explode, no join back)
-    tm = (mapping.groupBy(*keys)
-          .agg(F.collect_list(F.struct("gid", "final")).alias("gf")))
-    joined = seg_tiles_off.join(tm, keys, "left")
+    A uint16 value fits below bit 17, so (seg << 17) | val is one
+    sortable int64 key per (segment, value) bin for seg ids < 2^46."""
+    seg = np.asarray(seg).ravel().astype(np.int64)
+    pix = pix.reshape(pix.shape[0], -1)
+    valid = seg > 0
+    keys, bands, cnts = [], [], []
+    for b in range(pix.shape[0]):
+        v = pix[b].astype(np.int64)
+        m = valid if null_val is None else valid & (v != null_val)
+        k, c = np.unique((seg[m] << np.int64(17)) | v[m],
+                         return_counts=True)
+        keys.append(k)
+        cnts.append(c)
+        bands.append(np.full(len(k), b, dtype=np.int32))
+    key = np.concatenate(keys)
+    return (key >> 17, np.concatenate(bands), key & ((1 << 17) - 1),
+            np.concatenate(cnts))
 
-    def kernel(batches):
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                seg = np.frombuffer(row.segtile, dtype="<u4").reshape(
-                    row.ysize, row.xsize).astype(np.int64)
-                gid = np.where(seg > 0, seg + row.offset, 0)
-                top, bottom, left, right = _trim_bounds(
-                    row.tcol, row.trow, row.ntcols, row.ntrows,
-                    row.xsize, row.ysize, margin)
-                core = gid[top:bottom, left:right]
-                lut = {}
-                if row.gf is not None:
-                    for item in row.gf:
-                        lut[int(item["gid"])] = int(item["final"])
-                u, inv = np.unique(core, return_inverse=True)
-                mapped = np.fromiter(
-                    (0 if g == 0 else lut.get(int(g), 0) for g in u),
-                    dtype=np.int64, count=len(u))
-                final = mapped[inv].reshape(core.shape).ravel()
-                pix = decode_tile_pixels(row.pixels, row.nbands,
-                                         row.ysize, row.xsize)
-                pix_core = pix[:, top:bottom, left:right]
-                valid = final > 0
-                for b in range(row.nbands):
-                    v = pix_core[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = (final[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17, "band": b,
-                        "val": uk & ((1 << 17) - 1), "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
 
-    part = joined.mapInPandas(kernel, HIST_SCHEMA)
+def hist_frame(image_id, hist) -> pd.DataFrame:
+    """One image's (or tile's) :func:`value_histogram` as HIST_COLS
+    rows."""
+    seg_id, band, val, cnt = hist
+    return pd.DataFrame({"image_id": image_id, "seg_id": seg_id,
+                         "band": band, "val": val, "cnt": cnt})
+
+
+def hist_batch(frames) -> pd.DataFrame:
+    return (pd.concat(frames, ignore_index=True) if frames
+            else pd.DataFrame(columns=HIST_COLS))
+
+
+def merge_histogram(part):
+    """Stage-1 merge: sum the partial bins of every tile/image."""
     return (part.groupBy("image_id", "seg_id", "band", "val")
             .agg(F.sum("cnt").alias("cnt")))
 
@@ -151,22 +134,18 @@ def segment_stats_tiled(images_df, cfg, percentiles=(50,),
     so one mosaic's tiles run across the cluster instead of inside
     the single task that decoded the image (fit the matrix with
     segment.fit_global_centres — the reference's own prepare
-    phase)."""
-    from .segment import (explode_and_segment, explode_tiles,
-                          segment_tiles, sequential_stitch_mapping)
-    from .skew import spread_small_scan
+    phase). Both modes honour cfg.on_decode_error.
 
-    if centres is None:
-        st = explode_and_segment(images_df, cfg, emit_hist=True,
-                                 keep_binaries=False)
-    else:
-        tiles = spread_small_scan(
-            explode_tiles(images_df, cfg.tile_size, cfg.overlap))
-        st = segment_tiles(tiles, centres, cfg, emit_hist=True,
-                           keep_binaries=False)
-    part = sequential_stitch_mapping(st, cfg.overlap, output="hist")
-    hist_all = (part.groupBy("image_id", "seg_id", "band", "val")
-                .agg(F.sum("cnt").alias("cnt")))
+    To get the same stats from a restored S6 checkpoint (kernel rows
+    WITH pixel/segtile binaries), paint and histogram it:
+    tile_value_histogram(paint_final_tiles(st, mapping, overlap,
+    with_histogram=True, img_null_val=..., keep_pixels=False))."""
+    from .segment import segment_to_tiles, sequential_stitch_mapping
+
+    st = segment_to_tiles(images_df, cfg, centres, emit_hist=True,
+                          keep_binaries=False)
+    hist_all = merge_histogram(
+        sequential_stitch_mapping(st, cfg.overlap, output="hist"))
     if not with_nodata or cfg.img_null_val is None:
         if cfg.img_null_val is not None:
             hist_all = hist_all.filter(
@@ -198,44 +177,21 @@ def tile_value_histogram(final_tiles, img_null_val: int | None = None):
             # full value granularity, so post-hoc filtering is exact
             # (and idempotent if paint already filtered).
             part = part.filter(F.col("val") != img_null_val)
-        return (part.groupBy("image_id", "seg_id", "band", "val")
-                .agg(F.sum("cnt").alias("cnt")))
+        return merge_histogram(part)
 
     def kernel(batches):
         for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                seg = np.frombuffer(row.segdata, dtype="<i8").reshape(
-                    row.out_ysize, row.out_xsize)
-                pix = np.frombuffer(row.pixels, dtype="<u2").reshape(
-                    row.nbands, row.out_ysize, row.out_xsize)
-                segf = seg.ravel()
-                valid = segf > 0
-                for b in range(row.nbands):
-                    v = pix[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = segf[m] << np.int64(17)  # 17 bits > uint16
-                    key = key | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+            yield hist_batch([
+                hist_frame(row.image_id, value_histogram(
+                    np.frombuffer(row.segdata, dtype="<i8"),
+                    np.frombuffer(row.pixels, dtype="<u2").reshape(
+                        row.nbands, -1),
+                    img_null_val))
+                for row in pdf.itertuples(index=False)])
 
-    cols = ["image_id", "out_xsize", "out_ysize", "nbands", "pixels",
-            "segdata"]
-    part = final_tiles.select(*cols).mapInPandas(kernel, HIST_SCHEMA)
-    return (part.groupBy("image_id", "seg_id", "band", "val")
-            .agg(F.sum("cnt").alias("cnt")))
+    cols = ["image_id", "nbands", "pixels", "segdata"]
+    return merge_histogram(
+        final_tiles.select(*cols).mapInPandas(kernel, HIST_SCHEMA))
 
 
 def check_image_alignment(seg_images, images_df,
@@ -305,106 +261,33 @@ def seg_image_value_histogram(seg_images, images_df,
         .join(images_df.select("image_id", "bytes", "fmt"), "image_id")
 
     def kernel(batches):
-        from ..sources.codec import decode_image
         for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                seg = np.frombuffer(row.segdata, dtype="<i8")
-                pix = decode_image(row.bytes, row.fmt, row.w, row.h)
-                valid = seg > 0
-                for b in range(row.nbands):
-                    v = pix[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = (seg[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+            # the segmentation row's band count selects the bands
+            yield hist_batch([
+                hist_frame(row.image_id, value_histogram(
+                    np.frombuffer(row.segdata, dtype="<i8"),
+                    pix[:row.nbands], img_null_val))
+                for row, pix in decode_rows(pdf)])
 
-    part = j.mapInPandas(kernel, HIST_SCHEMA)
-    return (part.groupBy("image_id", "seg_id", "band", "val")
-            .agg(F.sum("cnt").alias("cnt")))
+    return merge_histogram(j.mapInPandas(kernel, HIST_SCHEMA))
 
 
 def segment_and_histogram(images_df, cfg):
     """Fused flagship kernel: decode -> segment -> per-segment value
     histogram in ONE mapInPandas pass (no second decode, no shuffle
     join of raster binaries — at 10^12-image scale the only shuffle
-    is the tiny histogram-row merge). Emits HIST_SCHEMA rows."""
-    import time as _time
+    is the tiny histogram-row merge). The same whole-image kernel as
+    segment.segment_images (same per-image centre fit, same decode
+    policy); only the emitted rows differ. Returns the merged
+    HIST_SCHEMA histogram."""
+    from .segment import whole_image_kernel
 
-    from ..kernels.shepherd import do_shepherd_segmentation
+    def emit(row, img, res, secs):
+        return hist_frame(row.image_id, value_histogram(
+            res.segimg, img, cfg.img_null_val))
 
-    cfg_b = cfg
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-
-    def kernel(batches):
-        from ..sources.codec import decode_image
-        from .tiling import fit_image_centres
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                t0 = _time.time()
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if getattr(cfg_b, "on_decode_error",
-                               "fail") == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters)
-                        or cfg_b.num_clusters)
-                # same floored-sample centre fit as the tiled path,
-                # so single-tile images give identical results on
-                # both consumption paths
-                res = do_shepherd_segmentation(
-                    img,
-                    centres=fit_image_centres(img, k, cfg_b),
-                    min_segment_size=cfg_b.min_segment_size,
-                    max_spectral_diff=cfg_b.max_spectral_diff,
-                    img_null_val=cfg_b.img_null_val,
-                    four_connected=cfg_b.four_connected,
-                    spect_dist_pcntile=cfg_b.spect_dist_pcntile,
-                    max_clump_size=cfg_b.max_clump_size)
-                seg = res.segimg.ravel().astype(np.int64)
-                valid = seg > 0
-                for b in range(img.shape[0]):
-                    v = img[b].ravel().astype(np.int64)
-                    m = valid
-                    if cfg_b.img_null_val is not None:
-                        m = m & (v != cfg_b.img_null_val)
-                    if not m.any():
-                        continue
-                    key = (seg[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-                _ = t0
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
-
-    part = images_df.select(*cols).mapInPandas(kernel, HIST_SCHEMA)
-    return (part.groupBy("image_id", "seg_id", "band", "val")
-            .agg(F.sum("cnt").alias("cnt")))
+    return merge_histogram(whole_image_kernel(
+        images_df, cfg, emit, HIST_SCHEMA, HIST_COLS))
 
 
 def segment_stats(hist, percentiles=(50,)):
@@ -421,43 +304,16 @@ def segment_stats(hist, percentiles=(50,)):
                       cumulative-count walk, tilingstats.py:969-986)
       pixcount      — n
     All derived with built-in JVM aggregations (max_by, windows) —
-    no UDFs in this stage.
+    no UDFs in this stage. Output: min_val, max_val, pix_count,
+    mean_val, stddev_val, mode_val, one pNN_val per percentile, and
+    median_val (= p50_val) when 50 is among them — a fixed selection
+    of :func:`segment_stats_selected`.
     """
-    g = ["image_id", "seg_id", "band"]
-    # ONE window pass (cumulative + total counts share the sort) and
-    # ONE aggregation: the histogram — and therefore everything
-    # upstream of it — is scanned exactly once. Percentiles are
-    # conditional mins over the cumulative counts; mode is
-    # max_by(val, (cnt, -val)); variance is single-pass in doubles
-    # (values <= 2^17 keep E[x^2]-E[x]^2 well above the double noise
-    # floor).
-    w_cum = (Window.partitionBy(*g).orderBy("val")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    w_all = (Window.partitionBy(*g)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    h = (hist.withColumn("cum", F.sum("cnt").over(w_cum))
-         .withColumn("n", F.sum("cnt").over(w_all)))
-    vc = F.col("val").cast("double") * F.col("cnt")
-    v2c = (F.col("val").cast("double") * F.col("val").cast("double")
-           * F.col("cnt"))
-    mean = F.sum(vc) / F.sum("cnt")
-    aggs = [
-        F.min("val").alias("min_val"),
-        F.max("val").alias("max_val"),
-        F.sum("cnt").alias("pix_count"),
-        mean.alias("mean_val"),
-        F.sqrt(F.greatest(F.sum(v2c) / F.sum("cnt") - mean * mean,
-                          F.lit(0.0))).alias("stddev_val"),
-        F.max_by("val", F.struct(F.col("cnt"),
-                                 (-F.col("val")).alias("nv")))
-        .alias("mode_val"),
-    ]
-    for p in percentiles:
-        aggs.append(F.min(F.when(
-            F.col("cum") >= F.col("n") * F.lit(p) / F.lit(100),
-            F.col("val"))).alias(f"p{p:02d}_val"))
-    out = h.groupBy(*g).agg(*aggs)
+    out = segment_stats_selected(hist, [
+        ("min_val", "min"), ("max_val", "max"),
+        ("pix_count", "pixcount"), ("mean_val", "mean"),
+        ("stddev_val", "stddev"), ("mode_val", "mode"),
+    ] + [(f"p{p:02d}_val", "percentile", p) for p in percentiles])
     if 50 in percentiles:
         out = out.withColumn("median_val", F.col("p50_val"))
     return out

@@ -89,7 +89,8 @@ def run_segmentation_checkpointed(spark, images_df, cfg, ckpt_dir,
     lin = LineageLog(run_id)
     t0 = time.time()
     tiles = explode_tiles(images_df, cfg.tile_size, cfg.overlap,
-                          fit_cfg=cfg)
+                          fit_cfg=cfg,
+                          on_decode_error=cfg.on_decode_error)
     seg_tiles = resume_segment_tiles(
         spark, tiles, None, cfg, os.path.join(ckpt_dir, "seg_tiles"))
     lin.record("segment", wall_s=time.time() - t0)

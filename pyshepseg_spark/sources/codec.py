@@ -123,6 +123,35 @@ def decode_image(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
+def check_decode_policy(on_decode_error: str) -> None:
+    """on_decode_error policies: "fail" raises on a corrupt bytes row
+    like the reference; "skip" drops the row — at 10^12-image scale
+    garbage rows exist and must not kill the stage."""
+    if on_decode_error not in ("fail", "skip"):
+        raise ValueError(f"on_decode_error must be 'fail' or 'skip', "
+                         f"got {on_decode_error!r}")
+
+
+# the image-table columns a decode kernel selects
+IMAGE_COLS = ["image_id", "bytes", "w", "h", "fmt"]
+
+
+def decode_rows(pdf, on_decode_error: str = "fail"):
+    """The one decode loop every image kernel runs: yields
+    ``(row, img)`` for each row of a pandas batch carrying
+    bytes/fmt/w/h, decoding with :func:`decode_image`. A row that
+    fails to decode raises under "fail" and is dropped under
+    "skip"."""
+    for row in pdf.itertuples(index=False):
+        try:
+            img = decode_image(row.bytes, row.fmt, row.w, row.h)
+        except Exception:
+            if on_decode_error == "skip":
+                continue
+            raise
+        yield row, img
+
+
 def average_phash(band: np.ndarray, null_val: int | None = None) -> int:
     """Deterministic 64-bit average hash of one band (8x8 block mean,
     threshold at the global mean of the downsample). Returns a signed

@@ -384,16 +384,16 @@ def test_streaming_stats_batch_replay_is_idempotent(spark, tmp_path):
 def test_stats_from_restored_binary_checkpoint(spark, tmp_path):
     """Resume scenario for the stats consumer: a durable S6
     checkpoint (parquet of kernel rows WITH pixel/segtile binaries,
-    written by a raster-producing run) is read back cold and fed to
-    stats_histogram_from_stitch — the histogram must equal the
-    primary kernel-histogram path bit for bit."""
+    written by a raster-producing run) is read back cold, painted
+    with the fused histogram and fed to tile_value_histogram — the
+    stats must equal the primary kernel-histogram path bit for
+    bit."""
     import pandas as pd
     from pyshepseg_spark.operators.segment import (
         SegConfig, checkpoint_with_meta, explode_and_segment,
-        sequential_stitch_mapping)
+        paint_final_tiles, sequential_stitch_mapping)
     from pyshepseg_spark.operators.zonal import (
-        segment_stats, segment_stats_tiled,
-        stats_histogram_from_stitch)
+        segment_stats, segment_stats_tiled, tile_value_histogram)
     from pyshepseg_spark.sources.imagegen import generate_images_pdf
 
     cfg = SegConfig(img_null_val=65535, four_connected=False,
@@ -409,8 +409,10 @@ def test_stats_from_restored_binary_checkpoint(spark, tmp_path):
     restored = spark.read.parquet(ckpt)
     st, meta = checkpoint_with_meta(restored)
     mapping = sequential_stitch_mapping(meta, cfg.overlap)
-    hist = stats_histogram_from_stitch(st, mapping, cfg.overlap,
-                                       img_null_val=65535)
+    final = paint_final_tiles(st, mapping, cfg.overlap,
+                              with_histogram=True, img_null_val=65535,
+                              keep_pixels=False)
+    hist = tile_value_histogram(final, 65535)
     got = segment_stats(hist, percentiles=(50,)).toPandas() \
         .sort_values(["image_id", "seg_id", "band"],
                      ignore_index=True)

@@ -72,12 +72,11 @@ def test_whole_image_path_agrees_on_segment_structure(
 
 
 def test_lineage_metrics(spark, images_fixture, cfg):
-    from pyshepseg_spark.operators.segment import (
-        fit_centres_per_image, segment_tiles)
+    from pyshepseg_spark.operators.segment import segment_tiles
     _, _, images = images_fixture
-    tiles = explode_tiles(images, cfg.tile_size, cfg.overlap)
-    centres = fit_centres_per_image(images, cfg)
-    st = segment_tiles(tiles, centres, cfg)
+    tiles = explode_tiles(images, cfg.tile_size, cfg.overlap,
+                          fit_cfg=cfg)
+    st = segment_tiles(tiles, None, cfg)
     m = tile_metrics(st).toPandas()
     assert (m.n_tiles == 4).all()
     assert (m.kernel_secs > 0).all()
@@ -467,11 +466,13 @@ def test_tall_mosaic_streams_across_arrow_batches(spark):
 
 def test_corrupt_image_row_skippable(spark):
     """A corrupt bytes row with cfg.on_decode_error='skip' drops out
-    of every consumption path instead of killing the stage; the
+    of every consumption path instead of killing the stage — the
+    global-centres path (stride sample + spread tiles) included; the
     default ('fail') still raises, matching the reference."""
     import dataclasses
     import pandas as pd
     import pytest
+    from pyshepseg_spark.operators.segment import fit_global_centres
     from pyshepseg_spark.operators.zonal import segment_stats_tiled
     from pyshepseg_spark.sources.imagegen import generate_images_pdf
     pdf = generate_images_pdf(2, size=96, seed=41)
@@ -492,6 +493,23 @@ def test_corrupt_image_row_skippable(spark):
     assert set(out["image_id"]) == set(pdf["image_id"])
     segs = segment_images(images, cfg_skip).toPandas()
     assert set(segs["image_id"]) == set(pdf["image_id"])
+    with pytest.raises(Exception):
+        fit_global_centres(images, cfg)
+    centres = fit_global_centres(images, cfg_skip)
+    final, _, _ = segment_images_tiled(images, cfg_skip,
+                                       centres=centres)
+    got = {r["image_id"] for r in
+           final.select("image_id").distinct().collect()}
+    assert got == set(pdf["image_id"])
+    out = segment_stats_tiled(images, cfg_skip, percentiles=(50,),
+                              centres=centres).toPandas()
+    assert set(out["image_id"]) == set(pdf["image_id"])
+
+
+def test_segconfig_rejects_unknown_decode_policy():
+    import pytest
+    with pytest.raises(ValueError, match="on_decode_error"):
+        SegConfig(on_decode_error="skp")
 
 
 def test_fit_global_centres_discovers_nodata(spark, images_fixture,

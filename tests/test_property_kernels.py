@@ -65,6 +65,38 @@ def test_relabel_makes_ids_contiguous(h, w, seed):
         assert len(np.unique(seg[cells])) == 1
 
 
+_SEG_IDS = st.one_of(st.just(0), st.integers(1, 50),
+                    st.integers(2 ** 31 - 2, 2 ** 31 + 2),
+                    st.integers(2 ** 31, 2 ** 45))
+_VALS = st.one_of(st.integers(0, 65535), st.just(65535))
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.tuples(_SEG_IDS, _VALS, _VALS), max_size=300),
+       st.sampled_from([None, 65535]))
+def test_value_histogram_matches_counter(rows, null_val):
+    """The one histogram packer equals a plain Counter over
+    (seg, band, val) for segmented pixels, with val 65535 and seg ids
+    above 2^31 in play, both with nodata masked (null_val=65535) and
+    with nodata bins kept (None)."""
+    from collections import Counter
+
+    from pyshepseg_spark.operators.zonal import value_histogram
+    seg = np.array([r[0] for r in rows], dtype=np.int64)
+    pix = np.array([[r[1] for r in rows], [r[2] for r in rows]],
+                   dtype=np.uint16).reshape(2, len(rows))
+    want = Counter((s, b, v) for s, *vals in rows
+                   for b, v in enumerate(vals)
+                   if s > 0 and v != null_val)
+    sid, band, val, cnt = value_histogram(seg, pix, null_val)
+    assert [a.dtype for a in (sid, band, val, cnt)] == [
+        np.int64, np.int32, np.int64, np.int64]
+    got = list(zip(sid.tolist(), band.tolist(), val.tolist(),
+                   cnt.tolist()))
+    assert {(s, b, v): c for s, b, v, c in got} == dict(want)
+    assert len(got) == len(want)
+
+
 @settings(max_examples=8, deadline=None, derandomize=True)
 @given(st.integers(100, 230),                  # image size
        st.sampled_from([(48, 16), (64, 16), (64, 24), (96, 24)]),
