@@ -170,15 +170,22 @@ def exact_duplicates(docs, text_col="text", id_col="doc_id"):
             .filter(F.col("n_docs") > 1))
 
 
-def _shingles(text_col, k=5):
-    """Word k-shingle hashes as array<long>, computed with JVM
-    builtins (split + transform + xxhash64 via concat)."""
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.transform(
+def _shingles(docs, text_col, k, keep):
+    """``keep`` columns + ``sh``: word k-shingle hashes as
+    array<long>, computed with JVM builtins (split + transform +
+    xxhash64 via concat). The word split is projected ONCE into its
+    own column; inlined in the transform lambda it re-ran lower +
+    regexp_replace + trim + split for every gram, O(words^2) per
+    doc. CollapseProject leaves the two projections apart: the
+    consumer reads the split twice (size and slice) and a split is
+    not cheap to duplicate."""
+    w = docs.select(*keep, F.split(normalized_text(F.col(text_col)),
+                                   " ").alias("_words"))
+    words = F.col("_words")
+    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - k, F.lit(0)))
+    return w.select(*keep, F.transform(
         idx, lambda i: F.xxhash64(
-            F.concat_ws(" ", F.slice(words, i + 1, k))))
+            F.concat_ws(" ", F.slice(words, i + 1, k)))).alias("sh"))
 
 
 def minhash_signatures(docs, text_col="text", id_col="doc_id",
@@ -204,9 +211,8 @@ def minhash_signatures(docs, text_col="text", id_col="doc_id",
             out.append(vals.min(axis=1).astype(np.int64).tolist())
         return pd.Series(out)
 
-    return docs.select(
-        id_col, F.col(text_col),
-        sig(_shingles(text_col, k)).alias("minhash"))
+    return _shingles(docs, text_col, k, [id_col, text_col]).select(
+        id_col, text_col, sig("sh").alias("minhash"))
 
 
 def minhash_band_keys(signatures, id_col="doc_id", num_hashes=64,
@@ -290,14 +296,20 @@ def ngram_jaccard_pairs(docs, cand_pairs, text_col="text",
     candidate pair can never survive the inner joins on a/b.
     cand_pairs is barriered first because it now feeds three
     consumers (the id prefilter and both verify joins) and an
-    unbarriered LSH candidate join would re-run per consumer."""
+    unbarriered LSH candidate join would re-run per consumer.
+
+    The distinct shingle arrays are built once per candidate doc
+    (_shingles splits each text once, not once per gram) and
+    barriered too: they feed both verify-join sides, and an
+    unbarriered projection is re-evaluated per side."""
     cand_pairs = cand_pairs.localCheckpoint(eager=False)
     ids = (cand_pairs.select(F.col("a").alias(id_col))
            .union(cand_pairs.select(F.col("b").alias(id_col)))
            .distinct())
-    sh = docs.join(ids, id_col, "left_semi").select(
-        F.col(id_col),
-        F.array_distinct(_shingles(text_col, k)).alias("sh"))
+    sh = (_shingles(docs.join(ids, id_col, "left_semi"), text_col, k,
+                    [id_col])
+          .select(id_col, F.array_distinct("sh").alias("sh"))
+          .localCheckpoint(eager=False))
     a = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
     j = (cand_pairs.join(a, "a").join(b, "b")
@@ -333,8 +345,8 @@ def simhash(docs, text_col="text", id_col="doc_id", k=3):
             out[i] = word.astype(np.int64)
         return pd.Series(out)
 
-    return docs.select(id_col, sh64(_shingles(text_col, k))
-                       .alias("simhash"))
+    return _shingles(docs, text_col, k, [id_col]).select(
+        id_col, sh64("sh").alias("simhash"))
 
 
 def simhash_block_keys(sim, id_col="doc_id", blocks=4,
@@ -663,23 +675,29 @@ def duplicate_groups(pairs, a_col="a", b_col="b"):
 def hyperplane_band_keys(emb, id_col="vec_id", vec_col="embedding",
                          bits=16, bands=4, seed=42):
     """One row per (vector, band) with key = that band's slice of the
-    random-hyperplane sign sketch. Shared by the batch self-join
+    random-hyperplane sign sketch. Shared by the batch operator
     (embedding_near_dups) and the streaming sketch store
-    (streaming/dedup.py): the planes are a deterministic function of
-    (seed, dim), so equal inputs derive IDENTICAL keys across
-    batches. The sketch is a vectorized pandas UDF (one matmul per
-    Arrow batch); the band split is JVM bit arithmetic."""
+    (streaming/dedup.py): the planes are
+    ``default_rng(seed).standard_normal((bits, dim))`` in float32,
+    a deterministic function of (seed, dim), so equal inputs derive
+    IDENTICAL keys across batches. The sketch is a vectorized pandas
+    UDF (one matmul per Arrow batch) that builds the planes from the
+    vector length it sees, once per dim — no job runs up front to
+    read the dimension, and an empty input yields an empty frame.
+    The band split is JVM bit arithmetic."""
     if bits % bands != 0:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
     width = bits // bands
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    dim = first["d"]
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((bits, dim)).astype(np.float32)
+    planes_by_dim = {}
 
     @pandas_udf("long")
     def sketch(vs: pd.Series) -> pd.Series:
         m = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
+        planes = planes_by_dim.get(m.shape[1])
+        if planes is None:
+            planes = planes_by_dim[m.shape[1]] = (
+                np.random.default_rng(seed)
+                .standard_normal((bits, m.shape[1])).astype(np.float32))
         s = (m @ planes.T) > 0
         out = np.zeros(len(vs), dtype=np.int64)
         for i in range(bits):
@@ -697,109 +715,115 @@ def hyperplane_band_keys(emb, id_col="vec_id", vec_col="embedding",
                                                          "key"))
 
 
+# Rows per side of one verify GEMM block: a block's float64 cosine
+# matrix is at most 2048 x 2048 x 8 B = 32 MB, whatever the bucket size.
+GEMM_BLOCK_ROWS = 2048
+
+
+def _key_runs(it):
+    """Arrow tables of consecutive rows with equal (band, key) —
+    columns 1 and 2 — from a partition sorted by them. A run that
+    crosses a batch boundary is carried into the next batch."""
+    import pyarrow as pa
+
+    from .similarity import _concat_batches
+    tail = None
+    for tbl in _concat_batches(it, target_rows=8192):
+        if tail is not None:
+            tbl = pa.concat_tables([tail, tbl])
+        band = tbl.column(1).to_numpy()
+        key = tbl.column(2).to_numpy()
+        cuts = np.flatnonzero((band[1:] != band[:-1])
+                              | (key[1:] != key[:-1])) + 1
+        starts = np.concatenate([[0], cuts])
+        for lo, hi in zip(starts[:-1], cuts):
+            yield tbl.slice(lo, hi - lo)
+        tail = tbl.slice(starts[-1])
+    if tail is not None:
+        yield tail
+
+
 def embedding_near_dups(emb, id_col="vec_id", vec_col="embedding",
                         threshold=0.95, bits=16, bands=4, seed=42):
     """Embedding-cosine near-dup via BANDED random-hyperplane LSH:
     sign sketch (``bits`` planes) split into ``bands`` band keys ->
-    equi-join per (band, key) -> exact cosine verify on candidates.
+    candidates share a (band, key) bucket -> exact cosine verify.
+    Returns (a, b, cosine) with a < b by id value, one row per pair.
 
     Recall math (sim = cos, agree p = 1 - acos(sim)/pi): a single
     monolithic sketch needs ALL bits equal (p^bits — at cos 0.95 and
     16 bits that is ~0.18 recall); banding needs all bits equal in
     ANY ONE band (1 - (1 - p^(bits/bands))^bands — same config ~0.99).
-    More bands = higher recall and more candidates to verify; the
-    shuffle stays proportional to candidate count, never all-pairs.
+    More bands = higher recall and more candidates to verify.
     bits must divide evenly by bands.
 
-    r06 execution: the band self-join carries (id, band, key) ONLY —
-    vectors never enter the candidate shuffle (guide §2.3: decide
-    with small rows). Candidate pairs are verified by the
-    bit-identical JVM-fold cosine twin (similarity.fold_dots/
-    fold_norms) against a broadcast (id -> vector) matrix, so every
-    >=-threshold decision and the emitted ``cosine`` doubles equal
-    the previous cosine_expr verify exactly (verified at
-    sf0.001..1.0). The corpus matrix broadcast is bounded by the
-    embedding table's vector payload — the same bytes the old plan
-    shipped per-candidate through the join, now shipped once per
-    executor."""
-    from .similarity import (_as_matrix, _concat_batches,
-                             _np_elem_dtype, fold_dots_t, fold_norms)
-    vdt = _np_elem_dtype(emb, vec_col)
-    pdf = emb.select(id_col, vec_col).toPandas()
-    vecs = _as_matrix(pdf[vec_col], vdt)
-    ids_index = pd.Index(pdf[id_col])
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids_index, vecs))
-    thr = float(threshold)
+    Execution: (id, band, key, vector) rows are shuffled once by
+    (band, key), so shuffle bytes are bands x the vector bytes;
+    the corpus is neither collected (toPandas) nor broadcast. Each task
+    sorts its rows by (band, key) and verifies one bucket at a time
+    with a blocked float64 GEMM, at most GEMM_BLOCK_ROWS rows per
+    side per block. Every pair whose GEMM cosine reaches the
+    threshold or lies within 1e-4 of it is replayed through the
+    bit-identical JVM-fold twin (similarity.fold_dots_t/
+    fold_norms): the f32-product/sum-order error is <= ~2.4e-7, so
+    only replayed pairs can change decision, and every emitted
+    ``cosine`` double is the exact fold value. A pair sharing
+    several buckets is emitted once (distinct).
 
-    # barrier the (id, band, key) frame before the self-join fan-out
-    # (the minhash/simhash lesson): one sketch-UDF pass total, and
-    # no join-key filter duplication below the exchange. Vectors are
-    # projected OUT before the checkpoint so it materializes ~12
-    # bytes/row, not bands x vector payload. The explicit
-    # repartition BY THE JOIN KEY before the barrier is what keeps
-    # the verify parallel: the band-join inputs are tiny (~3 MB at
-    # sf1.0), so a planner-inserted shuffle would be AQE-coalesced
-    # to ONE partition — and since the join OUTPUT is the candidate
-    # explosion (2.9M pairs at sf1.0, invisible to AQE's
-    # input-sized stage planning), the whole verify would run in
-    # one task (measured: 7 s single-task fold vs sub-second
-    # parallel). A user-specified partition count is never
-    # coalesced, and the checkpointed (band, key) partitioning is
-    # reusable by the join on either strategy (BHJ probes it
-    # in-place; SMJ at larger scale needs no exchange).
+    The partition count is explicit (defaultParallelism): AQE
+    coalesces a planner-inserted shuffle by its input bytes, so a
+    few MB of rows would land in ONE partition, while the verify
+    work grows with bucket size squared and would run in one task."""
+    from .similarity import (_arrow_matrix, _np_elem_dtype,
+                             fold_dots_t, fold_norms)
+    vdt = _np_elem_dtype(emb, vec_col)
+    thr = float(threshold)
+    block = GEMM_BLOCK_ROWS
     npart = emb.sparkSession.sparkContext.defaultParallelism
-    keys = hyperplane_band_keys(
-        emb, id_col=id_col, vec_col=vec_col, bits=bits, bands=bands,
-        seed=seed).select(id_col, "band", "key") \
-        .repartition(npart, "band", "key") \
-        .localCheckpoint(eager=False)
-    a = keys.select(F.col(id_col).alias("a"), "band", "key")
-    b = keys.select(F.col(id_col).alias("b"), "band", "key")
-    cand = (a.join(b, ["band", "key"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b"))
+    rows = (hyperplane_band_keys(emb, id_col=id_col, vec_col=vec_col,
+                                 bits=bits, bands=bands, seed=seed)
+            .select(id_col, "band", "key", vec_col)
+            .repartition(npart, "band", "key")
+            .sortWithinPartitions("band", "key"))
 
     def verify(it):
         import pyarrow as pa
-        idx_, vecs_ = bc.value
-        nf = fold_norms(vecs_)
-        v64 = vecs_.astype(np.float64, copy=False)
-        vt = np.ascontiguousarray(vecs_.T)   # fold-replay source
-        for tbl in _concat_batches(it):
-            aa = tbl.column(0).combine_chunks()
-            bb = tbl.column(1).combine_chunks()
-            ia = idx_.get_indexer(
-                aa.to_numpy(zero_copy_only=False))
-            ib = idx_.get_indexer(
-                bb.to_numpy(zero_copy_only=False))
-            # fast float64 row-dot for the DECISION, then fold-exact
-            # replay of (a) every pair within 1e-4 of the threshold
-            # (the f32-product/sum-order error is <= ~2.4e-7, so only
-            # replayed pairs can change decision) and (b) every
-            # SURVIVOR (its cosine double is emitted downstream and
-            # must be the bit-exact fold value)
-            d = np.einsum("ij,ij->i", v64[ia], v64[ib])
-            cos = d / (nf[ia] * nf[ib])
-            keep = cos >= thr
-            redo = np.nonzero(keep
-                              | (np.abs(cos - thr) <= 1e-4))[0]
-            if len(redo):
-                ra, rb = ia[redo], ib[redo]
-                cos[redo] = fold_dots_t(vt[:, ra], vt[:, rb]) \
-                    / (nf[ra] * nf[rb])
-                keep = cos >= thr
-            if not keep.any():
+        for run in _key_runs(it):
+            m = run.num_rows
+            if m < 2:
                 continue
-            mask = pa.array(keep)
-            yield pa.record_batch(
-                [aa.filter(mask), bb.filter(mask),
-                 pa.array(cos[keep], pa.float64())],
-                names=["a", "b", "cosine"])
+            ids = run.column(0).combine_chunks()
+            v = _arrow_matrix(run.column(3), vdt)
+            nf = fold_norms(v)
+            v64 = v.astype(np.float64, copy=False)
+            vt = np.ascontiguousarray(v.T)   # fold-replay source
+            for i0 in range(0, m, block):
+                for j0 in range(i0, m, block):
+                    cos = v64[i0:i0 + block] @ v64[j0:j0 + block].T
+                    cos /= (nf[i0:i0 + block, None]
+                            * nf[None, j0:j0 + block])
+                    redo = (cos >= thr) | (np.abs(cos - thr) <= 1e-4)
+                    if i0 == j0:
+                        redo = np.triu(redo, 1)
+                    pi, pj = np.nonzero(redo)
+                    if not len(pi):
+                        continue
+                    pi, pj = pi + i0, pj + j0
+                    c = fold_dots_t(vt[:, pi], vt[:, pj]) \
+                        / (nf[pi] * nf[pj])
+                    keep = c >= thr
+                    if not keep.any():
+                        continue
+                    yield pa.record_batch(
+                        [ids.take(pi[keep]), ids.take(pj[keep]),
+                         pa.array(c[keep], pa.float64())],
+                        names=["x", "y", "cosine"])
 
     idt = dict(emb.select(F.col(id_col).alias("i")).dtypes)["i"]
-    return (cand.mapInArrow(verify,
-                            f"a {idt}, b {idt}, cosine double")
+    return (rows.mapInArrow(verify, f"x {idt}, y {idt}, cosine double")
+            .filter(F.col("x") != F.col("y"))
+            .select(F.least("x", "y").alias("a"),
+                    F.greatest("x", "y").alias("b"), "cosine")
             .distinct())
 
 
